@@ -37,7 +37,9 @@ object MapGroupsStrategy extends FeatureStrategy {
     val tupleIdx: Array[Map[List[String], Int]] = spec.groupings.map { fam =>
       fam.valueTuples.zipWithIndex.map { case (t, i) => (t.toList, i) }.toMap
     }.toArray
-    val nTuples: Array[Int] = spec.groupings.map(_.valueTuples.length).toArray
+    val famOffset = Cells.familyOffsets(spec)
+    val featCells = Cells.featureCells(spec)
+    val featAggs = spec.features.map(_.agg).toArray
 
     val keyField = df.schema(spec.keyCol)
     val outSchema = StructType(
@@ -45,12 +47,6 @@ object MapGroupsStrategy extends FeatureStrategy {
         StructField(f.name,
           if (f.agg == AggKind.Count) LongType else DoubleType, nullable = true)
       })
-
-    // Feature -> (family, tuple index, highest bucket included, agg).
-    val featPlan: Array[(Int, Int, Int, AggKind)] = spec.features.map { f =>
-      (f.familyIdx, tupleIdx(f.familyIdx)(f.tuple.toList),
-        windows.indexOf(f.window), f.agg)
-    }.toArray
 
     val narrowed = df
       .filter(col(spec.timeCol) <= lit(maxWin))
@@ -66,13 +62,7 @@ object MapGroupsStrategy extends FeatureStrategy {
       if (row.isNullAt(0)) "n" else "v" + String.valueOf(row.get(0))
     }(Encoders.STRING)
     val result = grouped.mapGroups { (_, rows) =>
-      // Accumulators per (family, tuple, smallest-enclosing-window bucket):
-      // row count, non-null count, sum, min, max.
-      val cnt = Array.ofDim[Long](nFam, nTuples.max, nWin)
-      val nnz = Array.ofDim[Long](nFam, nTuples.max, nWin)
-      val sum = Array.ofDim[Double](nFam, nTuples.max, nWin)
-      val mn = Array.fill(nFam, nTuples.max, nWin)(Double.NaN)
-      val mx = Array.fill(nFam, nTuples.max, nWin)(Double.NaN)
+      val cells = Cells.empty(famOffset.last)
       var key: Any = null
       while (rows.hasNext) {
         val row = rows.next()
@@ -88,44 +78,24 @@ object MapGroupsStrategy extends FeatureStrategy {
             }.toList
             tupleIdx(fi).get(tuple) match {
               case Some(ti) =>
-                cnt(fi)(ti)(b) += 1L
-                if (!row.isNullAt(1)) {
-                  val v = row.getDouble(1)
-                  nnz(fi)(ti)(b) += 1L
-                  sum(fi)(ti)(b) += v
-                  if (mn(fi)(ti)(b).isNaN || v < mn(fi)(ti)(b)) mn(fi)(ti)(b) = v
-                  if (mx(fi)(ti)(b).isNaN || v > mx(fi)(ti)(b)) mx(fi)(ti)(b) = v
-                }
+                val c = famOffset(fi) + ti * nWin + b
+                if (row.isNullAt(1)) cells.addRow(c) else cells.addValue(c, row.getDouble(1))
               case None => ()
             }
             fi += 1
           }
         }
       }
-      // Roll buckets up into cumulative windows; same algebra as
-      // PivotRollupStrategy (exact avg = sum/nnz).
-      val out = new Array[Any](1 + featPlan.length)
+      // Roll buckets up into cumulative windows (the same roll-up as
+      // AggregatorStrategy's finish).
+      val out = new Array[Any](1 + featCells.length)
       out(0) = key
       var i = 0
-      while (i < featPlan.length) {
-        val (fi, ti, bMax, agg) = featPlan(i)
-        var c = 0L; var z = 0L; var s = 0.0
-        var lo = Double.NaN; var hi = Double.NaN
-        var b = 0
-        while (b <= bMax) {
-          c += cnt(fi)(ti)(b); z += nnz(fi)(ti)(b); s += sum(fi)(ti)(b)
-          val bmn = mn(fi)(ti)(b); val bmx = mx(fi)(ti)(b)
-          if (!bmn.isNaN && (lo.isNaN || bmn < lo)) lo = bmn
-          if (!bmx.isNaN && (hi.isNaN || bmx > hi)) hi = bmx
-          b += 1
-        }
-        out(i + 1) = agg match {
-          case AggKind.Count => c
-          case AggKind.Sum   => s
-          case AggKind.Avg   => if (z > 0) s / z else null
-          case AggKind.Min   => if (lo.isNaN) null else lo
-          case AggKind.Max   => if (hi.isNaN) null else hi
-        }
+      while (i < featCells.length) {
+        val (base, bMax) = featCells(i)
+        out(i + 1) =
+          if (featAggs(i) == AggKind.Count) cells.rows(base, bMax)
+          else cells.value(base, bMax, featAggs(i))
         i += 1
       }
       Row.fromSeq(out.toIndexedSeq)

@@ -37,9 +37,10 @@ trait FeatureStrategy {
   *     aggregate — one scan, one shuffle, codegen-eligible at this width.
   *   - wider, input below [[AutoStrategy.WideSpecPivotBytes]] →
   *     [[AggregatorStrategy]]: one scan + one shuffle of typed
-  *     ObjectHashAggregate state — the fastest measured shape at small
-  *     volume (BENCH tiny, 17M rows: aggregator 4.2 s vs pivot 15.3 s,
-  *     whose explode+pivot machinery is pure overhead there).
+  *     ObjectHashAggregate state — the shape chosen for small volume;
+  *     its measured `perfbench` `feature_tiny` job time (the reference
+  *     spec over DataGen.Tiny, 17.4M rows, on a 4-core host) is in the
+  *     [[AggregatorStrategy]] scaladoc.
   *   - wider AND larger → [[PivotRollupStrategy]]. Evidence
   *     (BENCH_medium_r0{3,4,5,6}, 1.72B rows): under healthy storage
   *     the two are par (r3: 100 vs 97 s; r4: 140 vs 144 s), but under
@@ -62,7 +63,7 @@ trait FeatureStrategy {
 object AutoStrategy extends FeatureStrategy {
 
   /** Input-size estimate above which wide specs compile as pivot-rollup
-    * (see decision table): between tiny's 113 MB (aggregator wins 3.6×)
+    * (see decision table): between tiny's 113 MB (routed to the aggregator)
     * and medium's 11 GB (pivot par-to-4× better), set at the decade
     * boundary. Compared against Catalyst's `optimizedPlan.stats
     * .sizeInBytes` — file bytes for a parquet scan, no job launched.

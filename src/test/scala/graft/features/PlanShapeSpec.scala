@@ -3,6 +3,7 @@ package graft.features
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.aggregate.{ObjectHashAggregateExec, SortAggregateExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -45,7 +46,8 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
   test("column pruning reaches the scan (unused columns never read)") {
     val needed = Set("customer_id", "card_type", "trx_type", "channel",
       "trx_amnt", "t_minus")
-    for (strat <- Seq[FeatureStrategy](CaseWhenStrategy, PivotRollupStrategy, MapGroupsStrategy)) {
+    for (strat <- Seq[FeatureStrategy](CaseWhenStrategy, PivotRollupStrategy,
+        MapGroupsStrategy, AggregatorStrategy)) {
       val df = strat(spark.read.parquet(dataPath), FeatureSpec.reference)
       // Chunked case-when has one scan per chunk, and pruning is FINER
       // than the monolith: a chunk whose features never touch `channel`
@@ -86,6 +88,19 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
       // fails the build.
       val pv = PivotRollupStrategy(spark.read.parquet(dataPath), FeatureSpec.reference)
       assert(shuffles(pv) == 2, s"pivot: expected 2 shuffles, found ${shuffles(pv)}")
+      // The typed aggregator: one exchange of Kryo-serialized partial
+      // buffers, with the object hash aggregate on both sides of it. A
+      // SortAggregate would mean the planner lost the hash path.
+      val ag = AggregatorStrategy(spark.read.parquet(dataPath), FeatureSpec.reference)
+      val agPlan = ag.queryExecution.executedPlan
+      assert(shuffles(ag) == 1, s"aggregator: expected 1 shuffle, found ${shuffles(ag)}")
+      val exchange = agPlan.collect { case e: ShuffleExchangeExec => e }.head
+      assert(exchange.child.isInstanceOf[ObjectHashAggregateExec],
+        s"aggregator: partial side is ${exchange.child.nodeName}")
+      assert(agPlan.collect { case a: ObjectHashAggregateExec => a }.exists(_.child eq exchange),
+        "aggregator: no ObjectHashAggregate reads the exchange")
+      assert(agPlan.collect { case a: SortAggregateExec => a }.isEmpty,
+        "aggregator: planned a SortAggregate")
     } finally {
       spark.conf.set("spark.sql.adaptive.enabled", "true")
       spark.conf.unset("spark.sql.files.maxPartitionBytes")

@@ -100,6 +100,41 @@ class StrategyEquivalenceSpec extends AnyFunSuite with SparkSpec {
     assert(sorted(AggregatorStrategy(df, spec)) == single, "aggregator diverged on NULL keys")
   }
 
+  test("NaN values order above every double in min/max, as Spark's do, in every strategy") {
+    // Three slices of two rows, so the NaN and the 5.0 of key 1 meet only
+    // in the merge of partial buffers; key 2 has a lone NaN; key 3 has a
+    // NaN in the 14-day bucket only.
+    val rows = Seq(
+      Row(1L, "a", "x", 1L, Double.NaN),
+      Row(2L, "a", "x", 1L, Double.NaN),
+      Row(1L, "a", "x", 2L, 5.0),
+      Row(3L, "a", "x", 10L, Double.NaN),
+      Row(3L, "a", "y", 1L, -2.0),
+      Row(1L, "b", "y", 1L, 1.0))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
+    // NaN != NaN, so compare NaN cells by name
+    def table(s: FeatureStrategy): Seq[Seq[Any]] =
+      collectSorted(s(df, spec)).map(_.map {
+        case d: Double if d.isNaN => "NaN"
+        case v                    => v
+      })
+    def cell(t: Seq[Seq[Any]], key: Long, feature: String): Any =
+      t.find(_.head == key).get(spec.outputColumns.indexOf(feature))
+    val expected = table(CaseWhenStrategy)
+    for (s <- Seq(CaseWhenStrategy, PivotRollupStrategy, MapGroupsStrategy, AggregatorStrategy)) {
+      val name = s.getClass.getSimpleName
+      val t = table(s)
+      assert(cell(t, 1L, "a_7d_max") == "NaN", s"$name: max({NaN, 5.0})")
+      assert(cell(t, 1L, "a_7d_min") == 5.0, s"$name: min({NaN, 5.0})")
+      assert(cell(t, 2L, "a_7d_min") == "NaN", s"$name: min({NaN})")
+      assert(cell(t, 2L, "a_7d_max") == "NaN", s"$name: max({NaN})")
+      assert(cell(t, 3L, "a_7d_max") == -2.0, s"$name: max before the NaN bucket")
+      assert(cell(t, 3L, "a_14d_max") == "NaN", s"$name: max over the NaN bucket")
+      assert(cell(t, 3L, "a_14d_min") == -2.0, s"$name: min over the NaN bucket")
+      assert(t == expected, s"$name diverged from case-when")
+    }
+  }
+
   test("a literal \"null\" string key and a NULL key stay distinct groups in mapGroups") {
     val s2 = StructType(Seq(
       StructField("k", StringType, nullable = true),
@@ -138,6 +173,11 @@ class StrategyEquivalenceSpec extends AnyFunSuite with SparkSpec {
     val expected = spec.outputColumns
     for (s <- Seq(CaseWhenStrategy, PivotRollupStrategy, MapGroupsStrategy, AggregatorStrategy))
       assert(s(df, spec).columns.toSeq == expected)
+    // the imperative two also agree on types and nullability: bigint
+    // counts, double values, every feature column nullable
+    val agg = AggregatorStrategy(df, spec).schema
+    assert(agg == MapGroupsStrategy(df, spec).schema, agg.treeString)
+    assert(agg.tail.forall(_.nullable), agg.treeString)
   }
 
   test("Count features count rows, not non-NULL values (VERDICT r1 bug #1)") {
