@@ -1,98 +1,49 @@
 package graft
-import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
+import java.nio.file.{Files, Path, Paths}
+import org.apache.spark.sql.execution.FormattedMode
+import scala.jdk.CollectionConverters._
 
-/** Regenerates docs/plans/<name>.txt — formatted physical plans of the four
-  * feature strategies over reference-shaped data plus the headline LLM
-  * operators over the sf0.001 tables (committed as reviewable evidence of
-  * the plan shapes PlanShapeSpec / LlmPlanSpec pin).
+/** Regenerates docs/plans/<name>.txt: the formatted physical plan of each
+  * named [[SparkEntry.queries]] gate over /root/testdata/sf0.001 (the
+  * `ref_trx_*` gates ignore the directory and read the generated verify
+  * slice), committed as reviewable evidence of the plan shapes
+  * PlanShapeSpec / LlmPlanSpec pin.
+  *
+  * Usage: `PlanDump [query-name…]`. With no names it regenerates every
+  * plan file that exists under docs/plans; an unknown name exits non-zero
+  * before any plan is built. Paths are relative to the working directory,
+  * so the same command run in a checkout of an older commit gives the
+  * "before" plans of a change.
   */
 object PlanDump {
+  private val Dir: Path = Paths.get("docs/plans")
+
   def main(args: Array[String]): Unit = {
+    val names =
+      if (args.nonEmpty) args.toSeq
+      else Files.list(Dir).iterator.asScala.map(_.getFileName.toString)
+        .filter(_.endsWith(".txt")).map(_.stripSuffix(".txt")).toSeq.sorted
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    if (unknown.nonEmpty) {
+      System.err.println(s"unknown query name(s): ${unknown.mkString(", ")}")
+      sys.exit(1)
+    }
+    // a fixed 8 (not the host's core count) keeps the exchange partition
+    // counts in the committed plans host-independent
     val spark = GraftSession.build(8, "plandump")
     spark.sparkContext.setLogLevel("ERROR")
-    val path = queries.RefWorkload.ensure(spark, datagen.DataGen.VerifySlice,
-      queries.RefWorkload.slicePath)
-    Files.createDirectories(Paths.get("/root/repo/docs/plans"))
     spark.conf.set("spark.sql.maxMetadataStringLength", "200")
-
-    def dump(name: String, df: DataFrame): Unit = {
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
+    Files.createDirectories(Dir)
+    for (name <- names) {
+      val plan = SparkEntry.queries(name)(spark, "/root/testdata/sf0.001")
+        .queryExecution.explainString(FormattedMode)
       // the 2,080-column lists don't aid review — keep the operator tree
       val trimmed = plan.linesIterator.map(l =>
         if (l.length > 300) l.take(297) + "..." else l).mkString("\n")
-      Files.writeString(Paths.get(s"/root/repo/docs/plans/$name.txt"), trimmed)
+      Files.writeString(Dir.resolve(s"$name.txt"), trimmed)
       println(s"wrote $name")
+      spark.catalog.clearCache() // drop the gate's persisted frames
     }
-
-    for ((name, strat) <- Seq(
-        "aggregator" -> features.AggregatorStrategy,
-        "pivot_rollup" -> features.PivotRollupStrategy,
-        "case_when" -> features.CaseWhenStrategy,
-        "map_groups" -> features.MapGroupsStrategy,
-        "auto" -> features.AutoStrategy))
-      dump(name, strat(spark.read.parquet(path), features.FeatureSpec.reference))
-
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    dump("llm_bloom_decontaminate", llm.Decontamination.ngramOverlapBloom(
-      docs, docs.filter(col("doc_id") % 50 === 0), "doc_id", "text", Seq("lang")))
-    dump("llm_multitable_ann", llm.Embeddings.lshTopKMultiTable(
-      emb, emb.filter(col("vec_id") < 10), "vec_id", "embedding",
-      dim = 64, bits = 3, tables = 10, k = 3))
-    dump("llm_minhash_salted", llm.Dedup.minhashPairs(
-      docs, "doc_id", "text", saltHotBuckets = true))
-    dump("llm_tfidf_topk", llm.Corpus.tfidfTopK(docs, "doc_id", "text", 3))
-    dump("llm_dup_spans", llm.Corpus.dupSpanStats(docs, "doc_id", "text"))
-    dump("llm_scrub_spans", llm.Decontamination.scrubSpans(
-      docs, docs.filter(col("doc_id") % 50 === 0), "doc_id", "text"))
-    dump("llm_scrub_boilerplate", llm.Corpus.scrubDuplicateSpans(
-      docs, "doc_id", "text"))
-    dump("llm_lm_familiarity", llm.Corpus.familiarity(
-      docs, "doc_id", "text", minCount = 100L))
-    dump("llm_token_budget", llm.Sampling.tokenBudget(
-      docs, "doc_id", "text", "source", budgets = Map("src0" -> 700L),
-      defaultBudget = 400L))
-    dump("llm_bm25_topk", llm.Retrieval.bm25TopK(
-      docs, docs.filter(col("doc_id") < 5), "doc_id", "text",
-      "doc_id", "text", k = 10))
-    dump("llm_emb_prune", llm.Embeddings.prototypePrune(
-      emb, emb.filter(col("vec_id") < 8), "vec_id", "embedding",
-      pruneNum = 1, pruneDenom = 4))
-    dump("llm_quality_classifier", llm.Corpus.logOddsQuality(
-      docs, "doc_id", "text", col("lang") === "en"))
-    dump("llm_lang_classify", llm.Corpus.nbClassify(
-      docs, "doc_id", "text", "lang"))
-    dump("llm_bpe_encode", llm.Corpus.bpeEncode(docs, "doc_id", "text",
-      Seq("e" -> "r", "o" -> "w", "r" -> "ow", "s" -> "t")))
-    dump("llm_sample_temperature", llm.Sampling.temperatureSample(
-      docs, "doc_id", "source", targetDocs = 300L))
-    // the production hybrid path: both halves served from persisted
-    // indexes, fused by RRF (llm_hybrid_indexed's plan, sf0.001 build)
-    spark.sql("CREATE DATABASE IF NOT EXISTS graft_plandump")
-    llm.Retrieval.writeBm25Index(docs, "doc_id", "text",
-      "graft_plandump.bm25", "/root/repo/target/tmp/plandump_bm25")
-    llm.Embeddings.writeIvfIndex(emb,
-      emb.filter(col("vec_id") < 8), "vec_id", "embedding",
-      "graft_plandump.ivf", "/root/repo/target/tmp/plandump_ivf")
-    dump("llm_hybrid_indexed", llm.Retrieval.rrfFuse(
-      llm.Retrieval.bm25IndexedTopK(spark, "graft_plandump.bm25",
-        docs.filter(col("doc_id") < 5), "doc_id", "text", k = 20,
-        excludeSelf = true)
-        .select(col("query_id"), col("doc_id"), col("rnk")),
-      llm.Embeddings.ivfIndexedTopK(spark, "graft_plandump.ivf",
-        emb.filter(col("vec_id") < 5), "vec_id", "embedding",
-        nprobe = 3, k = 20)
-        .select(col("query_id"), col("neighbor_id").as("doc_id"), col("rnk")),
-      "doc_id", k = 10))
-    val idxDir = "/root/repo/target/tmp/plandump_sig_index"
-    llm.Dedup.signatureIndex(docs.filter(col("doc_id") % 10 =!= 0), "doc_id", "text")
-      .write.mode("overwrite").parquet(idxDir)
-    dump("llm_incremental_dedup", llm.Dedup.incrementalPairs(
-      spark.read.parquet(idxDir), docs.filter(col("doc_id") % 10 === 0),
-      "doc_id", "text"))
     spark.stop()
   }
 }

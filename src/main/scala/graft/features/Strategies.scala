@@ -140,68 +140,6 @@ object CaseWhenStrategy extends FeatureStrategy {
   def apply(df: DataFrame, spec: FeatureSpec): DataFrame =
     chunked(df, spec, aggExprs(spec), MaxSingleAggFeatures)
 
-  /** Predicate-hoisted compilation — an r7 EXPERIMENT, measured
-    * performance-neutral and therefore NOT the apply() path. Each
-    * chunk's distinct (family-tuple, window) predicates — 64 per
-    * 320-feature chunk, since 5 aggs share each predicate — are
-    * computed once per row in a Project below the aggregate, and the
-    * 320 conditional aggregates read the precomputed boolean. The
-    * hypothesis was that the naive form re-evaluates each predicate
-    * (two string equalities + a comparison) up to 5× per row inside the
-    * interpreted 320-agg HashAggregate; measured on 4M cached
-    * reference-shaped rows (MicroBench `casewhen_hoist_speedup`) the
-    * two forms TIE at 0.96× — interpreted subexpression elimination
-    * already shares the duplicated predicates, and the dominant per-row
-    * cost is the 2,080 aggregate-buffer updates, which hoisting cannot
-    * touch (that cost is the case-when SHAPE; escaping it is what
-    * [[PivotRollupStrategy]] is for). Kept, with its
-    * StrategyEquivalenceSpec pin, as the committed record of the
-    * experiment (OPTIMIZATION_r07.md §1).
-    */
-  private[graft] def chunkedHoisted(
-      df: DataFrame, spec: FeatureSpec, chunkSize: Int): DataFrame = {
-    val k = "__graft_stitch_key"
-    val chunks = spec.features.grouped(chunkSize).toSeq
-    val single = chunks.lengthCompare(1) == 0
-    val aggs = chunks.map { feats =>
-      val combos = feats.map(f => (f.familyIdx, f.tuple, f.window)).distinct
-      val names = combos.zipWithIndex
-        .map { case (c, i) => c -> s"__graft_c$i" }.toMap
-      val condCols = combos.map { case c @ (fi, tuple, w) =>
-        val fam = spec.groupings(fi)
-        val cond = fam.cols.zip(tuple)
-          .foldLeft(col(spec.timeCol) <= lit(w)) {
-            case (acc, (cc, v)) => acc && col(cc) === lit(v)
-          }
-        cond.as(names(c))
-      }
-      val keyCol =
-        if (single) col(spec.keyCol) else struct(col(spec.keyCol)).as(k)
-      val pre = df.select(
-        keyCol +: col(spec.valueCol) +: condCols: _*)
-      val v = col(spec.valueCol)
-      val exprs = feats.map { f =>
-        val b = col(names((f.familyIdx, f.tuple, f.window)))
-        val e = f.agg match {
-          case AggKind.Count => sum(when(b, lit(1L)).otherwise(lit(0L)))
-          case AggKind.Sum   => coalesce(sum(when(b, v)), lit(0.0d))
-          case AggKind.Avg   => avg(when(b, v))
-          case AggKind.Min   => min(when(b, v))
-          case AggKind.Max   => max(when(b, v))
-        }
-        e.as(f.name)
-      }
-      val groupKey = if (single) col(spec.keyCol) else col(k)
-      pre.groupBy(groupKey).agg(exprs.head, exprs.tail: _*)
-    }
-    if (single) aggs.head
-    else {
-      val joined = aggs.reduce((l, r) => l.join(r, Seq(k)))
-      val featCols = joined.columns.filter(_ != k).map(c => col(s"`$c`"))
-      joined.select(col(k).getField(spec.keyCol).as(spec.keyCol) +: featCols.toSeq: _*)
-    }
-  }
-
   /** One aliased conditional-aggregate expression per feature. */
   private[graft] def aggExprs(spec: FeatureSpec): Seq[Column] =
     spec.features.map { f =>
@@ -225,7 +163,9 @@ object CaseWhenStrategy extends FeatureStrategy {
       e.as(f.name)
     }
 
-  /** Visible chunk-size knob for measurement (CodegenProbe) and tuning.
+  /** [[apply]] with an explicit chunk size; [[apply]] passes
+    * [[MaxSingleAggFeatures]], and StrategyEquivalenceSpec passes a small
+    * one to force the multi-chunk stitch on a narrow spec.
     *
     * The stitch join must be NULL-safe: `groupBy` emits a NULL-key group,
     * and an inner equi-join on the bare key would silently drop it for

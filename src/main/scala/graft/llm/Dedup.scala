@@ -428,21 +428,6 @@ object Dedup {
       bands: Int = 6, rowsPerBand: Int = 2,
       minJaccard: Double = 0.5,
       maxBucketSize: Int = 64): DataFrame = {
-    val (result, caches) = incrementalPairsPlan(index, shard, idCol, textCol,
-      bands, rowsPerBand, minJaccard, maxBucketSize)
-    scoped(result, caches: _*)
-  }
-
-  /** The lazy plan behind [[incrementalPairs]] plus its scoped cache
-    * handles — split out so plan evidence (tools.PlanDumpR08) can dump
-    * the join skeleton without triggering the eager materialization.
-    */
-  private[graft] def incrementalPairsPlan(
-      index: DataFrame, shard: DataFrame,
-      idCol: String, textCol: String,
-      bands: Int, rowsPerBand: Int,
-      minJaccard: Double,
-      maxBucketSize: Int): (DataFrame, Seq[DataFrame]) = {
     // r8 restructure (guide §2.3/§8): the r7 form unioned the whole
     // index with the shard, PERSISTED the union (the corpus hs payload
     // in cache — spills at volume, same failure mode the r8
@@ -505,7 +490,7 @@ object Dedup {
       .select(col("id_a"), col("id_b"),
         TextFunctions.jaccard(col("hs_a"), col("hs_b")).as("jaccard"))
       .filter(col("jaccard") >= lit(minJaccard))
-    (rescored, Seq(shardSig, shardBands, drop))
+    scoped(rescored, shardSig, shardBands, drop)
   }
 
   /** The ingest ACTION on top of [[incrementalPairs]]: the arriving

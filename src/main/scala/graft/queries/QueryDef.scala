@@ -19,16 +19,6 @@ object QueryDef {
     if (name == "events") events(spark, dir)
     else spark.read.parquet(s"$dir/$name.parquet")
 
-  /** events.parquet has stored `ts` as TIMESTAMP(NANOS) in some fixture
-    * generations (read as BIGINT nanos under
-    * `spark.sql.legacy.parquet.nanosAsLong`, set at session build) and as
-    * TIMESTAMP(MICROS) without a timezone in others (read natively as
-    * TIMESTAMP_NTZ). Normalize EITHER encoding to a session-zone micros
-    * timestamp with exact integer arithmetic: nanos -> `div 1000`
-    * truncation (DuckDB's ns->us cast truncates identically), NTZ -> a
-    * plain cast, which under the fixed UTC session zone relabels the
-    * same wall-clock instant bit-identically to DuckDB's reading.
-    */
   /** Identifier-safe slug of a data directory, for per-dir catalog table
     * and scratch-path names (ADVICE r6): the previous
     * `math.abs(dir.hashCode)` stayed negative for Int.MinValue (invalid
@@ -46,6 +36,16 @@ object QueryDef {
     dir.replaceAll("[^A-Za-z0-9]", "_").replaceAll("^_+", "") + "_" + digest
   }
 
+  /** events.parquet has stored `ts` as TIMESTAMP(NANOS) in some fixture
+    * generations (read as BIGINT nanos under
+    * `spark.sql.legacy.parquet.nanosAsLong`, set at session build) and as
+    * TIMESTAMP(MICROS) without a timezone in others (read natively as
+    * TIMESTAMP_NTZ). Normalize EITHER encoding to a session-zone micros
+    * timestamp with exact integer arithmetic: nanos -> `div 1000`
+    * truncation (DuckDB's ns->us cast truncates identically), NTZ -> a
+    * plain cast, which under the fixed UTC session zone relabels the
+    * same wall-clock instant bit-identically to DuckDB's reading.
+    */
   private def events(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
     import org.apache.spark.sql.types.{LongType, TimestampNTZType}

@@ -173,36 +173,6 @@ object MicroBench {
         flatten(transform(col("__ps"), p => sequence(p, p + lit(spanN - 1)))))))
     println(f"""{"case":"scrub_speedup","x":${scrubOld / scrubNew}%.2f}""")
     scrubDocs.unpersist()
-
-    // r7: case-when strategy, naive per-aggregate predicates vs the
-    // hoisted-predicate compilation (chunkedHoisted) — the full 2,080-
-    // feature reference spec over 4M cached reference-shaped rows, so
-    // the comparison is pure CPU (the macro bench reads parquet and is
-    // hostage to the storage regime). Both run the identical chunked
-    // plan shape (7 aggregated-state exchanges + stitch joins).
-    val spec = graft.features.FeatureSpec.reference
-    val trxTypes = typedLit(graft.model.Model.TrxTypes)
-    val trx = spark.range(0, 4000000).select(
-        pmod(col("id") * lit(2654435761L), lit(50000L)).as("customer_id"),
-        when(pmod(hash(col("id") * lit(3)), lit(4)) < 3, lit("DC"))
-          .otherwise(lit("CC")).as("card_type"),
-        element_at(trxTypes,
-          pmod(hash(col("id") * lit(5)), lit(13)).cast("int") + lit(1)).as("trx_type"),
-        when(pmod(hash(col("id") * lit(7)), lit(4)) < 1, lit("mobile"))
-          .otherwise(lit("web")).as("channel"),
-        (pmod(hash(col("id") * lit(11)), lit(990000)) / lit(100.0) + lit(100.0))
-          .as("trx_amnt"),
-        pmod(hash(col("id") * lit(13)), lit(730)).cast("long").as("t_minus"))
-      .persist()
-    trx.count()
-    val cwNaive = timeNoop("casewhen_naive")(graft.features.CaseWhenStrategy.chunked(
-      trx, spec, graft.features.CaseWhenStrategy.aggExprs(spec),
-      graft.features.CaseWhenStrategy.MaxSingleAggFeatures))
-    val cwHoisted = timeNoop("casewhen_hoisted")(
-      graft.features.CaseWhenStrategy.chunkedHoisted(
-        trx, spec, graft.features.CaseWhenStrategy.MaxSingleAggFeatures))
-    println(f"""{"case":"casewhen_hoist_speedup","x":${cwNaive / cwHoisted}%.2f}""")
-    trx.unpersist()
     spark.stop()
   }
 }

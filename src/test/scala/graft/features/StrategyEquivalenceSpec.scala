@@ -91,10 +91,6 @@ class StrategyEquivalenceSpec extends AnyFunSuite with SparkSpec {
     val stitched = sorted(CaseWhenStrategy.chunked(
       df, spec, CaseWhenStrategy.aggExprs(spec), 16))
     assert(stitched == single, "chunked stitch diverged on NULL keys")
-    // r7 predicate-hoisted form: same values through the multi-chunk
-    // stitch (chunkSize=16) AND the single-agg path, NULL keys included
-    val hoisted = sorted(CaseWhenStrategy.chunkedHoisted(df, spec, 16))
-    assert(hoisted == single, "hoisted chunked case-when diverged on NULL keys")
     assert(sorted(PivotRollupStrategy(df, spec)) == single, "pivot diverged on NULL keys")
     assert(sorted(MapGroupsStrategy(df, spec)) == single, "mapGroups diverged on NULL keys")
     assert(sorted(AggregatorStrategy(df, spec)) == single, "aggregator diverged on NULL keys")

@@ -142,8 +142,7 @@ class EventsStreamSpec extends AnyFunSuite with SparkSpec {
     // REMOVED by the watermark (not just "fewer than everything") and a
     // peak state bounded below the total join input — the metrics twin
     // of the committed plan dumps. Per-batch numbers for the sf0.01 run
-    // are committed as docs/bench/STREAM_STATE_r07.jsonl
-    // (tools.StreamStateEvidence).
+    // are committed as docs/bench/STREAM_STATE_r07.jsonl.
     import org.apache.spark.sql.functions.col
     import org.apache.spark.sql.streaming.Trigger
     val sfDir = "/root/testdata/sf0.001"
