@@ -327,8 +327,7 @@ object Bench {
       for ((name, strat) <- strategies)
         rs(name) =
           try timed(strat(spark.read.parquet(path), FeatureSpec.reference))
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] $name failed: ${e.getMessage}"); -1.0 }
+          catch { case e: Throwable => failed(name, e) }
       val qs = rs.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
         .mkString("{", ",", "}")
       val total = rs.values.filter(_ >= 0).sum
@@ -356,7 +355,7 @@ object Bench {
       try {
         Fs.deleteRecursively(new java.io.File(RefWorkload.tinyPath))
         timed2(RefWorkload.ensure(spark, DataGen.Tiny, RefWorkload.tinyPath))
-      } catch { case _: Throwable => -1.0 }
+      } catch { case e: Throwable => failed("ref_tiny_datagen", e) }
     val tiny = RefWorkload.tinyPath
     // untimed full-decode warm pass, same reason as the scale mode: the
     // first strategy otherwise pays the cold read of the regenerated data
@@ -369,13 +368,12 @@ object Bench {
         "ref_tiny_mapgroups" -> MapGroupsStrategy)) {
       results(name) =
         try timed(strat(spark.read.parquet(tiny), FeatureSpec.reference))
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}"); -1.0 }
+        catch { case e: Throwable => failed(name, e) }
     }
 
     for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)
          if !name.startsWith("ref_")) {
-      results(name) = try timed(fn(spark, sfDir)) catch { case _: Throwable => -1.0 }
+      results(name) = try timed(fn(spark, sfDir)) catch { case e: Throwable => failed(name, e) }
     }
 
     // Control bracket (VERDICT r7 #1): re-read the ref_tiny_datagen I/O
@@ -389,7 +387,7 @@ object Bench {
       try {
         Fs.deleteRecursively(new java.io.File(RefWorkload.tinyPath))
         timed2(RefWorkload.ensure(spark, DataGen.Tiny, RefWorkload.tinyPath))
-      } catch { case _: Throwable => -1.0 }
+      } catch { case e: Throwable => failed("control.end_s", e) }
     val calmRef = 5.3
     val controlStart = results.getOrElse("ref_tiny_datagen", -1.0)
     val controlOk = controlStart > 0 && controlEnd > 0 &&
@@ -406,6 +404,14 @@ object Bench {
     Files.writeString(OutFile, json)
     println(json)
     spark.stop()
+  }
+
+  /** Reports a failed entry on stderr with its cause; -1.0 is the
+    * entry's value in the JSON.
+    */
+  private def failed(name: String, e: Throwable): Double = {
+    System.err.println(s"[bench] $name failed: ${e.getClass.getName}: ${e.getMessage}")
+    -1.0
   }
 
   /** Time a side-effecting action (the generator writes its own parquet). */

@@ -22,21 +22,6 @@ import org.apache.spark.sql.types._
 object MapGroupsStrategy extends FeatureStrategy {
 
   def apply(df: DataFrame, spec: FeatureSpec): DataFrame = {
-    val spark = df.sparkSession
-    val maxWin = spec.windows.max
-    val windows = spec.windows.toArray
-    val nWin = windows.length
-
-    // Narrow projection: key, value (double), time (long), then each
-    // family's columns — column pruning reaches the scan exactly like the
-    // declarative strategies.
-    val famColNames: Array[Array[String]] = spec.groupings.map(_.cols.toArray).toArray
-    val dataCols = famColNames.flatten.distinct
-    val colPos: Map[String, Int] = dataCols.zipWithIndex.map { case (c, i) => (c, i + 3) }.toMap
-    val famPos: Array[Array[Int]] = famColNames.map(_.map(colPos))
-    val tupleIdx: Array[Map[List[String], Int]] = spec.groupings.map { fam =>
-      fam.valueTuples.zipWithIndex.map { case (t, i) => (t.toList, i) }.toMap
-    }.toArray
     val famOffset = Cells.familyOffsets(spec)
     val featCells = Cells.featureCells(spec)
     val featAggs = spec.features.map(_.agg).toArray
@@ -48,12 +33,15 @@ object MapGroupsStrategy extends FeatureStrategy {
           if (f.agg == AggKind.Count) LongType else DoubleType, nullable = true)
       })
 
+    // Narrow projection: key, value (double), then each family's cell id
+    // (Cells.cellIds) — column pruning reaches the scan exactly like the
+    // declarative strategies.
     val narrowed = df
-      .filter(col(spec.timeCol) <= lit(maxWin))
-      .select((Seq(col(spec.keyCol), col(spec.valueCol).cast(DoubleType),
-        col(spec.timeCol).cast(LongType)) ++ dataCols.map(col)): _*)
+      .filter(col(spec.timeCol) <= lit(spec.windows.max))
+      .select(col(spec.keyCol) +: col(spec.valueCol).cast(DoubleType) +:
+        Cells.cellIds(spec): _*)
 
-    val nFam = famPos.length
+    val nCols = 2 + spec.groupings.length
     // Shuffle key: prefix distinguishes a NULL key from the literal string
     // "null" (String.valueOf maps both to "null" — they must not share a
     // group). The output key is recovered from the group's rows, so the
@@ -67,27 +55,17 @@ object MapGroupsStrategy extends FeatureStrategy {
       while (rows.hasNext) {
         val row = rows.next()
         if (key == null) key = row.get(0)
-        val t = row.getLong(2)
-        var b = 0
-        while (b < nWin && windows(b) < t) b += 1
-        if (b < nWin) {
-          var fi = 0
-          while (fi < nFam) {
-            val tuple = famPos(fi).map { p =>
-              val v = row.get(p); if (v == null) null else v.toString
-            }.toList
-            tupleIdx(fi).get(tuple) match {
-              case Some(ti) =>
-                val c = famOffset(fi) + ti * nWin + b
-                if (row.isNullAt(1)) cells.addRow(c) else cells.addValue(c, row.getDouble(1))
-              case None => ()
-            }
-            fi += 1
+        var i = 2
+        while (i < nCols) {
+          if (!row.isNullAt(i)) {
+            if (row.isNullAt(1)) cells.addRow(row.getInt(i))
+            else cells.addValue(row.getInt(i), row.getDouble(1))
           }
+          i += 1
         }
       }
       // Roll buckets up into cumulative windows (the same roll-up as
-      // AggregatorStrategy's finish).
+      // AggregatorStrategy's eval).
       val out = new Array[Any](1 + featCells.length)
       out(0) = key
       var i = 0

@@ -36,8 +36,9 @@ trait FeatureStrategy {
   *     [[CaseWhenStrategy]]: the spec-canonical single conditional
   *     aggregate — one scan, one shuffle, codegen-eligible at this width.
   *   - wider, input below [[AutoStrategy.WideSpecPivotBytes]] →
-  *     [[AggregatorStrategy]]: one scan + one shuffle of typed
-  *     ObjectHashAggregate state — the shape chosen for small volume;
+  *     [[AggregatorStrategy]]: one scan + one shuffle of the
+  *     ObjectHashAggregate's per-key cell grids — the shape chosen for
+  *     small volume;
   *     its measured `perfbench` `feature_tiny` job time (the reference
   *     spec over DataGen.Tiny, 17.4M rows, on a 4-core host) is in the
   *     [[AggregatorStrategy]] scaladoc.

@@ -2,10 +2,13 @@ package graft.features
 
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.catalyst.expressions.{Attribute, CaseWhen}
+import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
+import org.apache.spark.sql.execution.{FileSourceScanExec, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.aggregate.{ObjectHashAggregateExec, SortAggregateExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plans, not just answers: the properties that make the strategies hold
@@ -88,8 +91,8 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
       // fails the build.
       val pv = PivotRollupStrategy(spark.read.parquet(dataPath), FeatureSpec.reference)
       assert(shuffles(pv) == 2, s"pivot: expected 2 shuffles, found ${shuffles(pv)}")
-      // The typed aggregator: one exchange of Kryo-serialized partial
-      // buffers, with the object hash aggregate on both sides of it. A
+      // The aggregator: one exchange of serialized partial cell grids,
+      // with the object hash aggregate on both sides of it. A
       // SortAggregate would mean the planner lost the hash path.
       val ag = AggregatorStrategy(spark.read.parquet(dataPath), FeatureSpec.reference)
       val agPlan = ag.queryExecution.executedPlan
@@ -106,6 +109,36 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
       spark.conf.unset("spark.sql.files.maxPartitionBytes")
       spark.conf.unset("spark.sql.files.openCostInBytes")
     }
+  }
+
+  test("aggregator's partial aggregate reads a double and int cell ids; the lookup stays in the codegen'd stage") {
+    // The row→cell lookup (Cells.cellIds) is the per-row work; it must run
+    // in the whole-stage-codegen'd Scan→Filter→Project, never inside the
+    // ObjectHashAggregate, which evaluates its inputs row by row.
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val plan = AggregatorStrategy(spark.read.parquet(dataPath), FeatureSpec.reference)
+        .queryExecution.executedPlan
+      val aggs = plan.collect { case a: ObjectHashAggregateExec => a }
+      val partial = aggs.filter(_.aggregateExpressions.forall(_.mode == Partial))
+      assert(partial.length == 1, plan.treeString)
+      val inputs = partial.head.aggregateExpressions.flatMap(_.aggregateFunction.children)
+      assert(inputs.length == 1 + FeatureSpec.reference.groupings.length, inputs.mkString(", "))
+      // columns of ints and a double only: no string reaches the aggregate
+      for (e <- inputs) {
+        assert(e.isInstanceOf[Attribute], s"aggregate input $e is not a column")
+        assert(e.dataType == IntegerType || e.dataType == DoubleType, s"aggregate input $e: ${e.dataType}")
+      }
+      for (a <- aggs)
+        assert(a.expressions.forall(_.find(_.isInstanceOf[CaseWhen]).isEmpty),
+          s"CASE inside ${a.simpleString(200)}")
+      partial.head.child match {
+        case stage: WholeStageCodegenExec =>
+          assert(stage.child.expressions.exists(_.find(_.isInstanceOf[CaseWhen]).nonEmpty),
+            s"no cell lookup in the stage below the aggregate:\n${stage.treeString}")
+        case other => fail(s"partial aggregate reads ${other.nodeName}, not a codegen'd stage")
+      }
+    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 
   test("case-when chunking boundary: <=MaxSingleAggFeatures stays one shuffle") {

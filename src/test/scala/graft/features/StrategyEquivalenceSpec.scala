@@ -2,6 +2,7 @@ package graft.features
 
 import graft.SparkSpec
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -59,6 +60,16 @@ class StrategyEquivalenceSpec extends AnyFunSuite with SparkSpec {
       assert(a == c, s"case-when vs mapGroups diverged (seed=$seed)")
       assert(a == d, s"case-when vs aggregator diverged (seed=$seed)")
     }
+  }
+
+  test("constant columns, which the optimizer folds into the aggregator's inputs, give the same answer") {
+    // A constant value and time, and a constant g1, make the value and the
+    // first family's cell id literals; the second family's stays a column.
+    val df = randomFrame(6L, 200)
+      .withColumn("g1", lit("a")).withColumn("t", lit(3L)).withColumn("v", lit(2.5))
+    val expected = collectSorted(CaseWhenStrategy(df, spec))
+    assert(collectSorted(AggregatorStrategy(df, spec)) == expected)
+    assert(collectSorted(MapGroupsStrategy(df, spec)) == expected)
   }
 
   test("NULL grouping keys survive every strategy AND the chunked stitch (ADVICE r3)") {
